@@ -290,7 +290,9 @@ def build_final_line(
 
     Under budget pressure (more entries in future rounds), optional
     scalars are dropped first (in _FINAL_OPTIONAL_KEYS order), then
-    query timings are re-rounded to 2 decimals; `queries`, `sf` and the
+    query timings are re-rounded to 2 decimals, and if the line still
+    does not fit, trailing `queries` entries are folded into a
+    `queries_elided` count until it does; `queries`, `sf` and the
     metric/value/unit trio are never dropped.  The full-precision
     payload is always available in BENCH_local_r*.json."""
     line_obj = {
@@ -317,6 +319,12 @@ def build_final_line(
         line_obj["queries"] = {
             n: round(t, 2) for n, t in timings.items()
         }
+        line = dump(line_obj)
+    kept = list(line_obj["queries"].items())
+    while len(line) > budget and kept:
+        kept.pop()
+        line_obj["queries"] = dict(kept)
+        line_obj["queries_elided"] = len(timings) - len(kept)
         line = dump(line_obj)
     return line
 

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from real_time_financial_market_data_pipeline_spark.operators.ohlcv import ohlcv
 from real_time_financial_market_data_pipeline_spark.pipeline.medallion import silver_filter, to_bronze
@@ -67,11 +68,16 @@ class MedallionStreamJob:
     gold_window_slow: str | None = "1 hour"
     trigger: dict = field(default_factory=lambda: {"availableNow": True})
     # Streaming state partition count, pinned into the checkpoint at first
-    # start. Per-partition state-store maintenance is paid EVERY micro-batch
-    # (measured here: 32 partitions ≈ 3.3s/batch vs 8 ≈ 0.9s/batch on
-    # identical data), so size to expected KEY cardinality — symbols are
-    # few; a deployment with millions of keys should raise this.
-    shuffle_partitions: int | None = 8
+    # start (existing checkpoints keep the count they were created with).
+    # Per-partition state-store maintenance — a delta-file commit per
+    # partition per stateful query — is paid EVERY micro-batch (measured
+    # here: 32 partitions ≈ 3.3s/batch vs 8 ≈ 0.9s/batch on identical
+    # data; on a 40-symbol live feed at a 2 s trigger, 4 partitions gave a
+    # gold-freshness p50 of 6.2–6.6 s against 6.6–8.9 s with 8, six
+    # interleaved pairs on a 4-core box), so size to expected KEY
+    # cardinality — symbols are few; a deployment with millions of keys
+    # should raise this.
+    shuffle_partitions: int | None = 4
     # RocksDB state store: off-heap, spill-to-disk state — required when
     # per-executor state (dedup keys × watermark horizon) outgrows heap.
     # Default HDFS-backed in-memory store is faster for small state.
@@ -202,13 +208,18 @@ class MedallionStreamJob:
                 else:
                     spark.conf.unset(provider_key)
 
-    def _start(self, trades: DataFrame) -> SinkManager:
-        marked = trades.withWatermark("event_time", self.watermark)
+    def _watermarked(self, valid: DataFrame) -> DataFrame:
+        """The event-time watermark goes on the VALID branch, after
+        validation: a dead-lettered row (e.g. dated hours in the future)
+        must not advance silver's watermark, or every later valid row
+        would be dropped as late."""
+        return valid.withWatermark("event_time", self.watermark)
 
-        bronze = to_bronze(marked)
+    def _start(self, trades: DataFrame) -> SinkManager:
+        bronze = to_bronze(trades)
         mgr = SinkManager()
         if self.dead_letters:
-            checked = with_validation_errors(marked)
+            checked = with_validation_errors(trades)
             dead = dead_letter_records(checked.filter(F.size("errors") > 0))
             valid = checked.filter(F.size("errors") == 0).drop("errors")
             mgr.add(
@@ -221,8 +232,10 @@ class MedallionStreamJob:
                 )
             )
         else:
-            valid = marked.filter(silver_filter())
-        silver = valid.dropDuplicatesWithinWatermark(["symbol", "timestamp"])
+            valid = trades.filter(silver_filter())
+        silver = self._watermarked(valid).dropDuplicatesWithinWatermark(
+            ["symbol", "timestamp"]
+        )
         gold = ohlcv(silver, self.gold_window)
 
         mgr.add(
@@ -317,8 +330,7 @@ class MedallionStreamJob:
         os.makedirs(bronze_dir, exist_ok=True)
         os.makedirs(silver_dir, exist_ok=True)
 
-        marked = trades.withWatermark("event_time", self.watermark)
-        bronze = to_bronze(marked)
+        bronze = to_bronze(trades)
         q_bronze = mgr.add(
             parquet_file_sink(
                 bronze,
@@ -334,15 +346,7 @@ class MedallionStreamJob:
         # silver: stream the bronze TABLE (schema derived from the same
         # transformation applied to an empty frame — single source of truth)
         bronze_schema = to_bronze(spark.createDataFrame([], trades.schema)).schema
-        bronze_stream = (
-            spark.readStream.schema(bronze_schema)
-            .option("basePath", bronze_dir)
-            .parquet(bronze_dir)
-            .drop("batch_id")  # sink-internal partition column, not table data
-        )
-        checked = with_validation_errors(
-            bronze_stream.withWatermark("event_time", self.watermark)
-        )
+        checked = with_validation_errors(_table_stream(spark, bronze_dir, bronze_schema))
         if self.dead_letters:
             dead = dead_letter_records(checked.filter(F.size("errors") > 0))
             mgr.add(
@@ -355,7 +359,9 @@ class MedallionStreamJob:
                 )
             )
         valid = checked.filter(F.size("errors") == 0).drop("errors")
-        silver = valid.dropDuplicatesWithinWatermark(["symbol", "timestamp"])
+        silver = self._watermarked(valid).dropDuplicatesWithinWatermark(
+            ["symbol", "timestamp"]
+        )
         q_silver = mgr.add(
             parquet_file_sink(
                 silver,
@@ -375,13 +381,7 @@ class MedallionStreamJob:
         silver_schema = silver.schema
 
         def _silver_stream() -> DataFrame:
-            return (
-                spark.readStream.schema(silver_schema)
-                .option("basePath", silver_dir)
-                .parquet(silver_dir)
-                .drop("batch_id")
-                .withWatermark("event_time", self.watermark)
-            )
+            return self._watermarked(_table_stream(spark, silver_dir, silver_schema))
 
         gold_queries = [
             mgr.add(
@@ -419,6 +419,29 @@ class MedallionStreamJob:
             # their emission dirs so serving reads list O(1) directories
             self.compact_gold(spark)
         return mgr
+
+
+def _table_stream(spark, path: str, schema: StructType) -> DataFrame:
+    """Stream a `trade_date`-partitioned parquet table written by
+    parquet_file_sink (bronze, silver), with the table's own column
+    order.
+
+    The stream is declared with the partition column LAST: each batch's
+    read infers it from the paths and puts it there, and Spark maps a
+    batch's columns onto the source schema by position.  Declared in
+    the middle, a stream started over an empty directory (no partition
+    dir to infer from yet — the live cold start) gets another column's
+    bytes in `trade_date` and every column after it.  The select
+    restores the table order, so downstream plans and state schemas are
+    the same either way."""
+    fields = [f for f in schema.fields if f.name != "trade_date"]
+    declared = StructType([*fields, schema["trade_date"]])
+    return (
+        spark.readStream.schema(declared)
+        .option("basePath", path)
+        .parquet(path)
+        .select(*schema.fieldNames())
+    )
 
 
 def observed_with_metrics(trades: DataFrame, name: str = "validation") -> DataFrame:

@@ -18,9 +18,10 @@ primary-key upsert the reference relied on
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -36,14 +37,35 @@ def parquet_sink(
     compact_every: int | None = None,
     compact_keys: list[str] | None = None,
 ) -> StreamingQuery:
-    """foreachBatch parquet writer: empty-batch early-exit, date partitioning.
+    """foreachBatch parquet writer: single-pass batches, date partitioning.
 
     Idempotent under replay: each micro-batch lands in its own
-    `batch_id=<n>` directory with OVERWRITE mode, so a batch re-run
-    after a crash-before-checkpoint rewrites the same directory instead
-    of appending duplicates (deterministic-batch-id idempotence — the
-    lake equivalent of the reference's primary-key upserts). Readers of
+    `batch_id=<n>` directory, replacing whatever a previous run of the
+    same batch id left there, so a batch re-run after a
+    crash-before-checkpoint rewrites the same directory instead of
+    appending duplicates (deterministic-batch-id idempotence — the lake
+    equivalent of the reference's primary-key upserts). Readers of
     `path` see `batch_id` as a discovered partition column.
+
+    SINGLE PASS: every action on a foreachBatch frame re-runs the
+    batch's plan, and for a stateful query that is the aggregate's
+    reduce side AND its state-store commit.  So the write is the
+    batch's only action: it lands in a hidden `_batch_inprogress_<n>`
+    staging dir (underscore names without `=` are skipped by Spark's
+    listing) while an Observation counts its rows in the same pass; a
+    batch with rows is renamed to `batch_id=<n>` and then added to the
+    reader manifest, an empty one is deleted.  Readers therefore never
+    see an empty or half-written batch dir.  No persist() either: it
+    adds a cache write and read to every batch and still runs a second
+    job.  Measured on a 4-core box, a 5-minute `ohlcv` through this
+    sink (8 state partitions): an `isEmpty()` before the write doubled
+    the state operator's `numRowsUpdated` and took addBatch to 2.0–2.6
+    s and the state commit to 1.9–2.5 s, against 1.36–1.41 s and
+    1.19–1.20 s for the write alone.  On the live chained medallion
+    (`perfbench` `market_live`, traced, one seed) this form plus 4 state
+    partitions cut the gold_5m / gold_1h addBatch p50 from 3802 / 2920
+    ms to 1517 / 1372 ms and their state commit p50 from 1718 / 1648
+    ms to 446 / 404 ms.
 
     `compact_every` + `compact_keys` enable INLINE auto-compaction for
     update-mode sinks: every N-th micro-batch first folds all PRIOR
@@ -82,12 +104,20 @@ def parquet_sink(
                 only_below=batch_id,
                 defer_retire=True,
             )
-        if batch_df.isEmpty():
-            return
-        writer = batch_df.write.mode("overwrite")
+        # the write is the batch's ONLY action (see the docstring): no
+        # isEmpty()/count() before it, the row count rides the write
+        rows = Observation()
+        staging = os.path.join(path, f"_batch_inprogress_{batch_id}")
+        writer = batch_df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(path, f"batch_id={batch_id}"))
+        writer.parquet(staging)
+        if not rows.get["n"]:
+            shutil.rmtree(staging, ignore_errors=True)
+            return
+        _publish_batch_dir(path, staging, batch_id)
         # manifest AFTER the data: a crash between leaves an on-disk dir
         # the manifest doesn't name yet — the replayed batch overwrites
         # it and re-adds (idempotent); manifest-routed readers just see
@@ -155,6 +185,23 @@ def parquet_file_sink(
         stream = stream.partitionBy(*partition_by)
     stream = stream.trigger(**(trigger or {"availableNow": True}))
     return stream.start()
+
+
+def _publish_batch_dir(path: str, staging: str, batch_id: int) -> None:
+    """Make a fully written staging dir visible as `batch_id=<n>`.  A
+    dir a previous run of the same batch id left behind (replay after a
+    crash-before-checkpoint) is moved aside under a hidden name first,
+    because a rename cannot replace a non-empty directory; a reader in
+    the window between the two renames sees the as-of-previous-batch
+    state, and a crash there leaves only hidden dirs that the replay of
+    this batch clears."""
+    target = os.path.join(path, f"batch_id={batch_id}")
+    aside = os.path.join(path, f"_batch_replaced_{batch_id}")
+    shutil.rmtree(aside, ignore_errors=True)
+    if os.path.isdir(target):
+        os.rename(target, aside)
+    os.rename(staging, target)
+    shutil.rmtree(aside, ignore_errors=True)
 
 
 _READER_MANIFEST = "_reader_manifest.json"

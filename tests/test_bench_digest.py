@@ -512,13 +512,16 @@ def test_final_line_sheds_optional_scalars_before_touching_queries():
     import json
 
     # ~120 synthetic entries blow the budget; optional scalars drop
-    # (in declared order) while queries/sf/metric survive intact
+    # (in declared order) while queries/sf/metric survive — the queries
+    # that do not fit even re-rounded are folded into a count
     timings = {f"entry_with_a_rather_long_name_{i:03d}": round(1.0 + i * 0.017, 3) for i in range(120)}
     line = bench.build_final_line(timings, 0.1, _digest_fixture())
+    assert len(line) <= bench.FINAL_LINE_BUDGET
     obj = json.loads(line)
-    assert obj["queries"] == timings or obj["queries"] == {
-        n: round(t, 2) for n, t in timings.items()
-    }
+    rounded = {n: round(t, 2) for n, t in timings.items()}
+    kept = list(obj["queries"].items())
+    assert kept == list(rounded.items())[: len(kept)]
+    assert len(kept) + obj.get("queries_elided", 0) == len(timings)
     assert obj["sf"] == 0.1 and obj["unit"] == "sec"
     dropped = [k for k in bench._FINAL_OPTIONAL_KEYS if k not in obj]
     kept = [k for k in bench._FINAL_OPTIONAL_KEYS if k in obj]
@@ -531,11 +534,22 @@ def test_final_line_last_resort_rerounds_queries_to_2_decimals():
 
     timings = {f"very_long_query_entry_name_padding_{i:04d}": 123.456 for i in range(200)}
     line = bench.build_final_line(timings, 0.1, _digest_fixture(), budget=1990)
+    assert len(line) <= 1990
     obj = json.loads(line)
     # every optional scalar gone, queries re-rounded, contract intact
     assert all(k not in obj for k in bench._FINAL_OPTIONAL_KEYS)
     assert obj["queries"]["very_long_query_entry_name_padding_0000"] == 123.46
     assert obj["metric"] == "headline_queries_total" and obj["sf"] == 0.1
+    # rounding alone cannot fit 200 entries: the tail is folded into a
+    # count, and the kept entries are the leading ones
+    assert 0 < len(obj["queries"]) < 200
+    assert len(obj["queries"]) + obj["queries_elided"] == 200
+    assert list(obj["queries"]) == list(timings)[: len(obj["queries"])]
+    # one more entry would not have fit
+    n = len(obj["queries"])
+    grown = dict(obj, queries=dict(list(timings.items())[: n + 1]), queries_elided=199 - n)
+    grown["queries"] = {k: round(v, 2) for k, v in grown["queries"].items()}
+    assert len(json.dumps(grown, separators=(",", ":"))) > 1990
 
 
 def test_needs_batch_third_rep_trigger_rule():

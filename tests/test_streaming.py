@@ -479,3 +479,226 @@ def test_inline_compaction_bounds_dirs_on_live_processing_time_stream(spark, fee
     bars = gold.collect()
     assert sum(r["trade_count"] for r in bars) == n_files
     assert sum(r["volume"] for r in bars) == n_files * 10
+
+
+def _write_ordered_feed(dirpath: str, batches: list[list[dict]]) -> None:
+    """write_feed with strictly ascending file mtimes, so a
+    maxFilesPerTrigger=1 source reads the files in list order."""
+    import time as _t
+
+    write_feed(dirpath, batches)
+    base = _t.time() - len(batches)
+    for i in range(len(batches)):
+        p = os.path.join(dirpath, f"batch_{i}.json")
+        os.utime(p, (base + i, base + i))
+
+
+def _committed_ids(checkpoint: str) -> list[int]:
+    commits = os.path.join(checkpoint, "commits")
+    return sorted(int(f) for f in os.listdir(commits) if f.isdigit())
+
+
+def _counted_gold_sink(spark, feed_dir: str, out_dir: str):
+    """A 5-minute ohlcv streaming aggregate, then a pass-all Python UDF
+    filter that counts every row it sees into an accumulator, through
+    parquet_sink (availableNow, one feed file per micro-batch).  The
+    filter reads an aggregate output, so it is neither pruned nor
+    pushed below the aggregate.  Returns the accumulator and the
+    finished query."""
+    from real_time_financial_market_data_pipeline_spark.operators.ohlcv import ohlcv
+    from real_time_financial_market_data_pipeline_spark.streaming.sinks import parquet_sink
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def _count(_):
+        calls.add(1)
+        return True
+
+    trades = read_trade_stream(spark, feed_dir, max_files_per_trigger=1)
+    bars = ohlcv(trades.withWatermark("event_time", "10 minutes"), "5 minutes")
+    bars = bars.filter(F.udf(_count, "boolean")("trade_count"))
+    q = parquet_sink(
+        bars,
+        os.path.join(out_dir, "gold"),
+        os.path.join(out_dir, "_checkpoints"),
+        "gold",
+        output_mode="update",
+    )
+    assert q.awaitTermination(120)
+    return calls, q
+
+
+def _assert_single_pass(spark, q, calls, written: int) -> None:
+    """Each micro-batch of `q` executed its plan once.  Three views of
+    it: the UDF accumulator saw each written row once; the state
+    operator updated each written row once (a second action re-runs the
+    reduce side, which updates — and commits — every row again); and the
+    query ran one Spark job per batch.  The accumulator alone cannot
+    catch a limit-1 action such as isEmpty(): a Python worker reports
+    its accumulator updates only once its input is exhausted, and
+    take(1) stops reading after one row."""
+    progress = q.recentProgress
+    assert calls.value == written
+    assert sum(p["stateOperators"][0]["numRowsUpdated"] for p in progress) == written
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(progress)
+
+
+# three files 20 event-minutes apart: the watermark passes the earlier
+# windows' ends, so the drain ends with a no-data eviction batch whose
+# update-mode output is empty
+_SPREAD_FEED = [
+    [
+        {"s": "AAPL", "p": 150.0 + i, "v": 10, "t": T0 + (20 * i) * 60_000},
+        {"s": "MSFT", "p": 380.0 + i, "v": 5, "t": T0 + (20 * i + 1) * 60_000},
+    ]
+    for i in range(3)
+]
+
+
+def test_parquet_sink_executes_each_stateful_batch_once(spark, feed_and_out):
+    """Every action on a foreachBatch frame re-runs the batch's plan —
+    for a stateful query, the aggregate's reduce side and its state
+    commit.  parquet_sink must run each batch exactly once (see
+    _assert_single_pass).  A no-data batch leaves neither a batch_id dir nor a manifest entry,
+    and no hidden staging dir survives."""
+    from real_time_financial_market_data_pipeline_spark.streaming.sinks import _read_reader_manifest
+
+    feed_dir, out_dir = feed_and_out
+    _write_ordered_feed(feed_dir, _SPREAD_FEED)
+    calls, q = _counted_gold_sink(spark, feed_dir, out_dir)
+
+    gold_dir = os.path.join(out_dir, "gold")
+    written = spark.read.parquet(gold_dir).count()
+    assert written == 6  # one bar per (symbol, window), each emitted once
+    _assert_single_pass(spark, q, calls, written)
+
+    dirs = _batch_dirs(gold_dir)
+    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
+    committed = _committed_ids(os.path.join(out_dir, "_checkpoints", "gold"))
+    assert len(committed) > len(dirs)  # the trailing no-data batch ran
+    assert sorted(_read_reader_manifest(gold_dir)) == dirs
+    assert [d for d in os.listdir(gold_dir) if d.startswith("_batch_")] == []
+
+
+def test_parquet_sink_replayed_batch_overwrites_its_own_dir(spark, feed_and_out):
+    """Crash after batch 2's write, before its commit: the restart
+    re-runs batch id 2, which replaces its own directory (new files,
+    same rows) instead of adding to it; other dirs are untouched."""
+    from real_time_financial_market_data_pipeline_spark.streaming.sinks import _read_reader_manifest
+
+    feed_dir, out_dir = feed_and_out
+    _write_ordered_feed(feed_dir, _SPREAD_FEED)
+    _counted_gold_sink(spark, feed_dir, out_dir)
+    gold_dir = os.path.join(out_dir, "gold")
+    ckpt = os.path.join(out_dir, "_checkpoints", "gold")
+
+    def snapshot():
+        return {
+            d: sorted(f for f in os.listdir(os.path.join(gold_dir, d)) if f.endswith(".parquet"))
+            for d in _batch_dirs(gold_dir)
+        }
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(gold_dir).collect())
+
+    before, rows_before = snapshot(), rows()
+    # replay batch 2: commits < 2, offsets <= 2 (the crash shape)
+    for log, keep in (("commits", lambda n: n < 2), ("offsets", lambda n: n <= 2)):
+        log_dir = os.path.join(ckpt, log)
+        for f in os.listdir(log_dir):
+            n = f.strip(".").split(".")[0]
+            if n.isdigit() and not keep(int(n)):
+                os.remove(os.path.join(log_dir, f))
+
+    calls, q = _counted_gold_sink(spark, feed_dir, out_dir)
+    after = snapshot()
+    assert set(after) == set(before)
+    assert after["batch_id=0"] == before["batch_id=0"]
+    assert after["batch_id=1"] == before["batch_id=1"]
+    assert after["batch_id=2"] != before["batch_id=2"]  # rewritten
+    assert rows() == rows_before
+    _assert_single_pass(spark, q, calls, 2)  # the replayed batch's two bars
+    assert sorted(_read_reader_manifest(gold_dir)) == sorted(before)
+    assert [d for d in os.listdir(gold_dir) if d.startswith("_batch_")] == []
+
+
+@pytest.mark.parametrize("chained", [True, False], ids=["chained", "fanout"])
+def test_future_dated_dead_letter_does_not_stall_silver(spark, feed_and_out, chained):
+    """A row dated 6 h in the future is dead-lettered by validation, and
+    the watermark sits on the valid branch after validation, so that row
+    never advances silver's event-time clock: every valid row of the
+    NEXT file still reaches silver.  (Were the watermark ahead of
+    validation, the future row would move it 6 h forward and every row
+    of the next file would be dropped as late.)"""
+    import time as _t
+
+    feed_dir, out_dir = feed_and_out
+    future_ms = int(_t.time() * 1000) + 6 * 3600 * 1000
+    write_feed(
+        feed_dir,
+        [
+            [
+                {"s": "AAPL", "p": 150.0, "v": 10, "t": T0},
+                {"s": "AAPL", "p": 151.0, "v": 10, "t": future_ms},
+            ]
+        ],
+    )
+    job = MedallionStreamJob(out_dir=out_dir)
+    assert job.start(read_trade_stream(spark, feed_dir), chained=chained).await_all(120)
+
+    # the next file, drained by a restart on the same checkpoints (the
+    # watermark carries over through the offset log)
+    nxt = [{"s": "MSFT", "p": 380.0 + i, "v": 5, "t": T0 + (i + 1) * 60_000} for i in range(3)]
+    with open(os.path.join(feed_dir, "batch_1.json"), "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in nxt)
+    assert job.start(read_trade_stream(spark, feed_dir), chained=chained).await_all(120)
+
+    silver = spark.read.parquet(os.path.join(out_dir, "silver"))
+    assert sorted(r["timestamp"] for r in silver.collect()) == [T0] + [r["t"] for r in nxt]
+    dead = spark.read.parquet(os.path.join(out_dir, "dead_letters")).collect()
+    assert [r["errors"] for r in dead] == [["future_timestamp"]]
+    assert json.loads(dead[0]["original"])["timestamp"] == future_ms
+    gold = latest_state_on_read(
+        spark.read.parquet(os.path.join(out_dir, "gold_5m")), ["symbol", "window_start"]
+    )
+    assert gold.filter(F.col("symbol") == "MSFT").groupBy().sum("trade_count").first()[0] == 3
+
+
+def test_live_chained_cold_start_partitions_silver_by_event_date(spark, feed_and_out):
+    """A live (processingTime) chained medallion started over an EMPTY
+    bronze directory: silver's stream schema is fixed before any
+    partition directory exists, so it must already carry the partition
+    column where each batch's read puts it (last).  One file later,
+    silver's only partition directory is the trade's event date and its
+    columns hold their own values."""
+    import time as _t
+
+    feed_dir, out_dir = feed_and_out
+    os.makedirs(feed_dir)
+    job = MedallionStreamJob(
+        out_dir=out_dir, trigger={"processingTime": "1 second"}, gold_window_slow=None
+    )
+    mgr = job.start(read_trade_stream(spark, feed_dir), chained=True, await_timeout_s=0)
+    silver_dir = os.path.join(out_dir, "silver")
+    try:
+        assert not [d for d in os.listdir(os.path.join(out_dir, "bronze")) if "=" in d]
+        tmp = os.path.join(feed_dir, ".batch_0.json")
+        with open(tmp, "w") as f:
+            f.write(json.dumps({"s": "AAPL", "p": 150.25, "v": 100, "t": T0}) + "\n")
+        os.rename(tmp, os.path.join(feed_dir, "batch_0.json"))
+        deadline = _t.monotonic() + 90
+        while _t.monotonic() < deadline:
+            silver_q = mgr.queries["chained_silver"]
+            if sum(p["numInputRows"] for p in silver_q.recentProgress) >= 1:
+                break
+            assert silver_q.isActive, silver_q.exception()
+            _t.sleep(0.5)
+    finally:
+        mgr.stop_all()
+
+    assert [d for d in os.listdir(silver_dir) if "=" in d] == ["trade_date=2023-11-14"]
+    rows = spark.read.parquet(silver_dir).collect()
+    assert len(rows) == 1
+    assert rows[0]["source"] == "feed" and rows[0]["price"] == 150.25
+    assert str(rows[0]["trade_date"]) == "2023-11-14"
