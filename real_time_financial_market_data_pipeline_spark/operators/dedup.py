@@ -737,14 +737,16 @@ def repeated_span_pairs(
     # pair self-join (and by the frequency cap): Catalyst does not CSE
     # across joins, so without materialization the tokenize+posexplode
     # pass re-executes once per instance (~3x end-to-end, measured —
-    # scripts/probe_span_pairs.py, round 21).  persist() shares ONE
-    # computation across all instances — the same within-query pattern
-    # as the minhash banded tables (eviction left to LRU; rows are
-    # (id, pos, fp), narrow).  Salting the pair join was profiled and
-    # REJECTED the same round: under the max_fp_docs cap the max
-    # per-fingerprint doc frequency at bench scale is 4 (p999 = 3) —
-    # there is no hot key to split.
-    fps = span_fingerprints(df, id_col=id_col, text_col=text_col, k=k).persist()
+    # scripts/probe_span_pairs.py, round 21).  An eager local
+    # checkpoint computes it ONCE and every instance reads its blocks;
+    # unlike persist() it registers nothing in the session's
+    # CacheManager, so no cached subtree outlives the call or gets
+    # substituted into a later query (its blocks are dropped once the
+    # frame is garbage-collected).
+    # Salting the pair join was profiled and REJECTED the same round:
+    # under the max_fp_docs cap the max per-fingerprint doc frequency at
+    # bench scale is 4 (p999 = 3) — there is no hot key to split.
+    fps = span_fingerprints(df, id_col=id_col, text_col=text_col, k=k).localCheckpoint(eager=True)
     if max_fp_docs is not None:
         common = (
             fps.groupBy("fp")

@@ -296,10 +296,20 @@ class MedallionStreamJob:
         With an availableNow trigger the layers drain SEQUENTIALLY
         (bronze fully lands, then silver streams bronze's files, then
         gold) — the backfill/replay shape.  With a processingTime
-        trigger the three queries run concurrently and files flow down
-        the chain with one trigger of added latency per layer — the
-        continuous shape (pass await_timeout_s=0 to skip the drain wait
-        and manage the returned queries yourself).
+        trigger the queries run concurrently — the continuous shape
+        (pass await_timeout_s=0 to skip the drain wait and manage the
+        returned queries yourself).  Only the source-facing bronze query
+        keeps the caller's interval.  Every processingTime query fires
+        on one epoch-aligned grid, so downstream layers on that interval
+        would idle until the tick after their upstream commits (one
+        trigger of added latency per layer); instead they poll every
+        interval/8 with no-data micro-batches off, and a file crosses
+        silver and gold within a fraction of a tick of each upstream
+        commit — at a 10 s trigger a trade reaches gold in about one
+        trigger plus three batches, not three triggers.  No-data batches
+        only advance the watermark: gold is update mode and silver's
+        dedup emits nothing without input, so switching them off
+        changes no output; state eviction waits for the next data batch.
 
         Layer contracts match `_start` (same transformations, same
         idempotent batch_id sinks); checkpoints live under
@@ -343,77 +353,94 @@ class MedallionStreamJob:
         )
         _await_if_sequential(q_bronze)
 
-        # silver: stream the bronze TABLE (schema derived from the same
-        # transformation applied to an empty frame — single source of truth)
-        bronze_schema = to_bronze(spark.createDataFrame([], trades.schema)).schema
-        checked = with_validation_errors(_table_stream(spark, bronze_dir, bronze_schema))
-        if self.dead_letters:
-            dead = dead_letter_records(checked.filter(F.size("errors") > 0))
-            mgr.add(
+        # downstream layers follow their input: a short poll, and no
+        # data-less batch per watermark advance.  Each query copies the
+        # session conf when it starts, so the conf is restored after.
+        downstream_trigger = self.trigger
+        no_data_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        old_no_data = None
+        if "processingTime" in self.trigger:
+            interval_ms = spark._jvm.org.apache.spark.sql.streaming.Trigger.ProcessingTime(
+                self.trigger["processingTime"]
+            ).intervalMs()
+            downstream_trigger = {"processingTime": f"{interval_ms // 8} milliseconds"}
+            old_no_data = spark.conf.get(no_data_key)
+            spark.conf.set(no_data_key, "false")
+        try:
+            # silver: stream the bronze TABLE (schema derived from the same
+            # transformation applied to an empty frame — single source of truth)
+            bronze_schema = to_bronze(spark.createDataFrame([], trades.schema)).schema
+            checked = with_validation_errors(_table_stream(spark, bronze_dir, bronze_schema))
+            if self.dead_letters:
+                dead = dead_letter_records(checked.filter(F.size("errors") > 0))
+                mgr.add(
+                    parquet_file_sink(
+                        dead,
+                        os.path.join(self.out_dir, "dead_letters"),
+                        self.checkpoints(),
+                        "chained_dead_letters",
+                        trigger=downstream_trigger,
+                    )
+                )
+            valid = checked.filter(F.size("errors") == 0).drop("errors")
+            silver = self._watermarked(valid).dropDuplicatesWithinWatermark(
+                ["symbol", "timestamp"]
+            )
+            q_silver = mgr.add(
                 parquet_file_sink(
-                    dead,
-                    os.path.join(self.out_dir, "dead_letters"),
+                    silver,
+                    silver_dir,
                     self.checkpoints(),
-                    "chained_dead_letters",
-                    trigger=self.trigger,
+                    "chained_silver",
+                    trigger=downstream_trigger,
+                    partition_by=["trade_date"],
                 )
             )
-        valid = checked.filter(F.size("errors") == 0).drop("errors")
-        silver = self._watermarked(valid).dropDuplicatesWithinWatermark(
-            ["symbol", "timestamp"]
-        )
-        q_silver = mgr.add(
-            parquet_file_sink(
-                silver,
-                silver_dir,
-                self.checkpoints(),
-                "chained_silver",
-                trigger=self.trigger,
-                partition_by=["trade_date"],
-            )
-        )
-        _await_if_sequential(q_silver)
+            _await_if_sequential(q_silver)
 
-        # gold: stream the silver TABLE.  Both rollup granularities read
-        # silver (already reduced by validation+dedup), never the raw
-        # source — the two gold queries are started together and awaited
-        # together since neither depends on the other.
-        silver_schema = silver.schema
+            # gold: stream the silver TABLE.  Both rollup granularities read
+            # silver (already reduced by validation+dedup), never the raw
+            # source — the two gold queries are started together and awaited
+            # together since neither depends on the other.
+            silver_schema = silver.schema
 
-        def _silver_stream() -> DataFrame:
-            return self._watermarked(_table_stream(spark, silver_dir, silver_schema))
+            def _silver_stream() -> DataFrame:
+                return self._watermarked(_table_stream(spark, silver_dir, silver_schema))
 
-        gold_queries = [
-            mgr.add(
-                parquet_sink(
-                    ohlcv(_silver_stream(), self.gold_window),
-                    os.path.join(self.out_dir, "gold_5m"),
-                    self.checkpoints(),
-                    "chained_gold_5m",
-                    output_mode="update",
-                    trigger=self.trigger,
-                    compact_every=self.compact_every,
-                    compact_keys=list(self.GOLD_KEYS),
-                )
-            )
-        ]
-        if self.gold_window_slow:
-            gold_queries.append(
+            gold_queries = [
                 mgr.add(
                     parquet_sink(
-                        ohlcv(_silver_stream(), self.gold_window_slow),
-                        os.path.join(self.out_dir, "gold_1h"),
+                        ohlcv(_silver_stream(), self.gold_window),
+                        os.path.join(self.out_dir, "gold_5m"),
                         self.checkpoints(),
-                        "chained_gold_1h",
+                        "chained_gold_5m",
                         output_mode="update",
-                        trigger=self.trigger,
+                        trigger=downstream_trigger,
                         compact_every=self.compact_every,
                         compact_keys=list(self.GOLD_KEYS),
                     )
                 )
-            )
-        for q in gold_queries:
-            _await_if_sequential(q)
+            ]
+            if self.gold_window_slow:
+                gold_queries.append(
+                    mgr.add(
+                        parquet_sink(
+                            ohlcv(_silver_stream(), self.gold_window_slow),
+                            os.path.join(self.out_dir, "gold_1h"),
+                            self.checkpoints(),
+                            "chained_gold_1h",
+                            output_mode="update",
+                            trigger=downstream_trigger,
+                            compact_every=self.compact_every,
+                            compact_keys=list(self.GOLD_KEYS),
+                        )
+                    )
+                )
+            for q in gold_queries:
+                _await_if_sequential(q)
+        finally:
+            if old_no_data is not None:
+                spark.conf.set(no_data_key, old_no_data)
         if sequential and await_timeout_s and self.compact_every:
             # drained availableNow run: gold queries are stopped, fold
             # their emission dirs so serving reads list O(1) directories

@@ -1,19 +1,19 @@
-"""Dump `.explain("formatted")` for declared queries into plans/r21/.
+"""Dump `.explain("formatted")` for declared queries into plans/r<round>/.
 
-Optimization-round evidence (round 21): one file per query per tag so
-before/after plan diffs are committed artifacts the judge can check
-without running Spark.
+Optimization-round evidence: one file per query per tag so before/after
+plan diffs are committed artifacts a reviewer can check without running
+Spark.
 
-    python scripts/dump_r21_plans.py <tag> [sf_dir] [query ...]
+    python scripts/dump_round_plans.py <round> <tag> [sf_dir] [query ...]
 
-tag is `before` or `after`; with no query names, every declared query
-is dumped.  Plans are rendered with maxMetadataStringLength raised so
+round is the optimization round number (plans/r21/ for 21); tag is
+`before` or `after`; with no query names, every declared query is
+dumped.  Plans are rendered with maxMetadataStringLength raised so
 ReadSchema / PushedFilters are untruncated.
 """
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -26,12 +26,15 @@ from real_time_financial_market_data_pipeline_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or list(QUERIES)
-    out_dir = REPO_ROOT / "plans" / "r21"
+    if len(sys.argv) < 2 or not sys.argv[1].isdigit():
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    names = sys.argv[4:] or list(QUERIES)
+    out_dir = REPO_ROOT / "plans" / f"r{rnd}"
     out_dir.mkdir(parents=True, exist_ok=True)
-    spark = get_spark(app_name="dump_r21_plans")
+    spark = get_spark(app_name=f"dump_r{rnd}_plans")
     spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
     failed: list[str] = []
     for name in names:

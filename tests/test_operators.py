@@ -447,6 +447,23 @@ def test_repeated_span_pairs_exact(spark):
     assert full[0]["rep_id"] == 1 and full[0]["rep_pos"] == 4
 
 
+def test_repeated_span_pairs_leaves_no_cached_frame(spark):
+    """The fingerprint frame shared by the pair self-join is materialized
+    for the call only: nothing stays registered in the session's
+    CacheManager to be substituted into later queries."""
+    from real_time_financial_market_data_pipeline_spark.operators.dedup import repeated_span_pairs
+
+    block = "the quick brown fox jumps over the lazy dog again"
+    docs = spark.createDataFrame(
+        [(1, "alpha " + block), (2, "beta " + block), (3, "gamma " + block)],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    assert repeated_span_pairs(docs, k=4, max_fp_docs=2).count() == 0
+    assert repeated_span_pairs(docs, k=4).count() == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_repeated_span_pairs_max_fp_docs_cap(spark):
     """The pair-enumeration frequency cap: a window present in more
     documents than max_fp_docs is excluded from PAIR generation (the

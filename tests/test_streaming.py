@@ -702,3 +702,99 @@ def test_live_chained_cold_start_partitions_silver_by_event_date(spark, feed_and
     assert len(rows) == 1
     assert rows[0]["source"] == "feed" and rows[0]["price"] == 150.25
     assert str(rows[0]["trade_date"]) == "2023-11-14"
+
+
+def _commit_times(checkpoint: str, log: str = "commits") -> dict[int, float]:
+    """Commit log (or, with log="offsets", the offset log written when
+    a batch starts): batch id -> the log file's mtime."""
+    d = os.path.join(checkpoint, log)
+    return {int(f): os.stat(os.path.join(d, f)).st_mtime for f in os.listdir(d) if f.isdigit()}
+
+
+def _data_batches(checkpoint: str) -> tuple[list[int], list[int]]:
+    """Committed batch ids split into (read new input, read none): a
+    batch whose source offset equals the previous batch's is a no-data
+    batch, run only to advance the watermark."""
+    offsets = {}
+    for n in _commit_times(checkpoint):
+        with open(os.path.join(checkpoint, "offsets", str(n))) as f:
+            offsets[n] = f.read().splitlines()[2:]
+    data, empty = [], []
+    for n in sorted(offsets):
+        (empty if offsets.get(n - 1) == offsets[n] else data).append(n)
+    return data, empty
+
+
+def test_live_chained_downstream_follows_its_input(spark, feed_and_out):
+    """A live chained medallion keeps the caller's processingTime
+    interval for bronze only; the downstream layers poll a fraction of
+    it with no-data batches off.  A feed file's gold_5m commit therefore
+    lands less than one bronze interval after its bronze commit (on a
+    shared trigger grid it waits a full tick per layer), no downstream
+    query runs a data-less batch, and the session conf is restored."""
+    import time as _t
+
+    interval_s = 4
+    feed_dir, out_dir = feed_and_out
+    os.makedirs(feed_dir)
+    no_data_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(no_data_key)
+    job = MedallionStreamJob(out_dir=out_dir, trigger={"processingTime": f"{interval_s} seconds"})
+    mgr = job.start(read_trade_stream(spark, feed_dir), chained=True, await_timeout_s=0)
+    assert spark.conf.get(no_data_key) == before
+
+    def feed(i: int) -> None:
+        tmp = os.path.join(feed_dir, f".batch_{i}.json")
+        with open(tmp, "w") as f:
+            for k in range(3):
+                f.write(json.dumps({"s": "AAPL", "p": 150.0 + k, "v": 10, "t": T0 + i * 60_000 + k}) + "\n")
+            f.write(json.dumps({"s": "AAPL", "p": 0.0, "v": 10, "t": T0 + i * 60_000 + 9}) + "\n")
+        os.rename(tmp, os.path.join(feed_dir, f"batch_{i}.json"))
+
+    def gold_rows() -> int:
+        return sum(p["numInputRows"] for p in mgr.queries["chained_gold_5m"].recentProgress)
+
+    try:
+        # the first file warms every query's plan; the second is timed
+        for i in range(2):
+            feed(i)
+            deadline = _t.monotonic() + 60
+            while gold_rows() < 3 * (i + 1) and _t.monotonic() < deadline:
+                for q in mgr.queries.values():
+                    assert q.isActive, q.exception()
+                _t.sleep(0.2)
+        # long enough for any watermark-only batch to follow the data
+        _t.sleep(interval_s / 2)
+    finally:
+        mgr.stop_all()
+    assert gold_rows() == 6
+
+    ckpt = job.checkpoints()
+    bronze_data, _ = _data_batches(os.path.join(ckpt, "chained_bronze"))
+    gold_data, _ = _data_batches(os.path.join(ckpt, "chained_gold_5m"))
+    lag = (
+        _commit_times(os.path.join(ckpt, "chained_gold_5m"))[gold_data[-1]]
+        - _commit_times(os.path.join(ckpt, "chained_bronze"))[bronze_data[-1]]
+    )
+    assert 0 < lag < interval_s, lag
+    for name in ("chained_dead_letters", "chained_silver", "chained_gold_5m", "chained_gold_1h"):
+        data, empty = _data_batches(os.path.join(ckpt, name))
+        assert len(data) == 2 and empty == [], (name, data, empty)
+
+
+def test_available_now_chained_drain_stays_sequential(spark, feed_and_out):
+    """An availableNow chained drain still runs each layer to the end
+    before the next one starts, on the caller's trigger."""
+    feed_dir, out_dir = feed_and_out
+    write_feed(feed_dir, [[{"s": "AAPL", "p": 150.25, "v": 100, "t": T0}]])
+    job = MedallionStreamJob(out_dir=out_dir, gold_window_slow=None, dead_letters=False)
+    job.start(read_trade_stream(spark, feed_dir), chained=True)
+
+    ckpt = job.checkpoints()
+    chain = [os.path.join(ckpt, f"chained_{layer}") for layer in ("bronze", "silver", "gold_5m")]
+    for upstream, downstream in zip(chain, chain[1:]):
+        # the downstream's first batch starts after the upstream's last commit
+        assert max(_commit_times(upstream).values()) <= min(_commit_times(downstream, "offsets").values())
+    # the drain ends on a watermark-only batch: no-data batches stay on
+    _, empty = _data_batches(os.path.join(ckpt, "chained_silver"))
+    assert empty
